@@ -8264,27 +8264,21 @@ def entry(spark: SparkSession) -> DataFrame:
 # fresh-green), so every query gets a driver check at least every ~3 rounds
 # — a regression in a long-green query can hide for at most that long.
 
-#: New in round 13 (never driver-green yet) → head of the rotation: the
-#: 12-query staged heavy tail — the backlog fully drains.  Budget check
-#: (the cap exists to protect the 50-slot window): after the r12 run the
-#: staleness histogram is r8×20/r9×50/r10×50/r11×50/r12×50 (recomputed
-#: with _last_green_round() before this flip), so these 12 flips + the
-#: 20-query r8 cohort + 18 of the r9×50 cohort fill the 50 slots and
-#: the rotation floor advances to r9 (32 r9 queries remain for r14).
+#: Changed since the last correctness round → head of the rotation: the four
+#: algebraic streaming-state operators, now native streaming aggregates
+#: instead of applyInPandasWithState (streaming/stateful.py).  The r13
+#: flips that headed the list before are green in CORRECTNESS_r14, so they
+#: rejoin the least-recently-green order.  Budget check: after the r14
+#: run the staleness histogram is r10×44/r11×50/r12×50/r13×38/r14×50
+#: with no never-green query (recomputed with _last_green_round()), so
+#: these 4 + the 44-query r10 cohort + 2 of the r11 cohort fill the 50
+#: slots and the rotation floor advances to r11.
 #: Everything else rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
-    "q_hll_join_estimate",
-    "q_attribution",
-    "q_setsim_pairs",
-    "q_incremental_setsim_feed",
-    "q_contamination_report",
-    "q_embedding_covariance",
-    "q_bfs_distances",
-    "q_k_core",
-    "q_plan_compaction",
-    "q_stream_rolling_zscore",
+    "q_stream_user_totals",
+    "q_stream_dedup",
+    "q_stream_cms",
     "q_stream_hll",
-    "q_g711_audio_stats",
 )
 
 

@@ -21,6 +21,8 @@ Derivation contract (the only place it is defined for Spark):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,32 +42,91 @@ TABLES = (
 )
 
 
+#: session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: abs path -> (file identity, {inference confs: schema, "row_groups": n}).
+#: Process-wide on purpose: every query loads through `load(spark, ...)`,
+#: and an entry is only ever served for the same file and the same confs.
+_FOOTERS: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+
+def _footer_memo(path: str) -> dict:
+    """The memo of one parquet FILE, emptied whenever the file at `path`
+    is no longer the same file (inode, mtime_ns, size).  Directories and
+    globs get a throwaway memo: their identity is not one stat."""
+    if not os.path.isfile(path):
+        return {}
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    ident = (st.st_ino, st.st_mtime_ns, st.st_size)
+    hit = _FOOTERS.get(path)
+    if hit is None or hit[0] != ident:
+        hit = _FOOTERS[path] = (ident, {})
+    return hit[1]
+
+
+def parquet_schema(spark: SparkSession, path: str):
+    """The schema `spark.read.parquet(path)` infers, memoized per file and
+    inference confs: inference costs one Spark job per call, a memo hit
+    none."""
+    memo = _footer_memo(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    if confs not in memo:
+        memo[confs] = spark.read.parquet(path).schema
+    return memo[confs]
+
+
+def parquet_row_groups(path: str) -> int:
+    """Row groups in a parquet file (or a directory of them), read from
+    the footers — the number of input splits that can hold rows."""
+    import pyarrow.dataset as ds
+
+    memo = _footer_memo(path)
+    if "row_groups" not in memo:
+        fragments = ds.dataset(path, format="parquet").get_fragments()
+        memo["row_groups"] = sum(f.num_row_groups for f in fragments)
+    return memo["row_groups"]
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-generated parquet table."""
+    """Load one catalog parquet table: a fresh relation (fresh
+    attribute ids, so self-joins of two loads stay unambiguous) over the
+    memoized footer schema."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS) which Spark cannot read
         # natively; read nanos as long, then truncate to micros exactly
         # (integer division — no double round-trip), matching DuckDB's
         # ns→µs truncation of the same file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    return normalize_events(df) if name == "events" else df
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load + widen partitioning for CPU-heavy downstream projections.
 
-    The driver's test parquet files are single-row-group, so the scan yields
-    ONE input split and per-row-expensive operators (minhash, simhash,
-    checksum generation) would run single-threaded.  A production table has
-    many row groups / files and never needs this; locally one small shuffle
-    buys full-core parallelism.  No-op when the scan is already split.
+    The test corpus's parquet files are single-row-group, so the scan
+    yields ONE split that holds rows (byte-range splits past the first
+    row group come back empty, so the scan's partition count says
+    nothing) and per-row-expensive operators (minhash, simhash, checksum
+    generation) would run single-threaded.  A production table has many
+    row groups / files and never needs this; locally one small shuffle
+    buys full-core parallelism.  No-op when the footers already hold a
+    row group per task slot.
     """
     df = load(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if parquet_row_groups(f"{sf_dir}/{name}.parquet") < target:
         df = df.repartition(target)
     return df
 

@@ -57,7 +57,7 @@ def rollup_table(
     this; rebuild with it only to audit the incremental path."""
     _check_measures(base, sum_cols, count_col)
     aggs = [F.count(F.lit(1)).alias(count_col)] + [
-        _exact_long_sum(_guarded(c)).alias(f"sum_{c}") for c in sum_cols
+        exact_long_sum(_guarded(c)).alias(f"sum_{c}") for c in sum_cols
     ]
     return base.groupBy(*group_keys).agg(*aggs)
 
@@ -65,8 +65,9 @@ def rollup_table(
 _LONG_MAX = 2**63 - 1
 
 
-def _exact_long_sum(values):
-    """Overflow-loud BIGINT sum on every config.
+def exact_long_sum(values, who: str = "rollup: measure"):
+    """Overflow-loud BIGINT sum on every config (shared with the
+    streaming user totals, streaming/stateful.py).
 
     A plain `sum(bigint)` WRAPS silently under non-ANSI; summing as
     DECIMAL(38,0) turns overflow into NULL instead — and since inputs
@@ -77,7 +78,7 @@ def _exact_long_sum(values):
     s = F.sum(values.cast("decimal(38,0)"))
     loud = F.when(
         s.isNull() | (F.abs(s) > _LONG_MAX),
-        F.raise_error(F.lit("rollup: measure sum overflowed bigint")),
+        F.raise_error(F.lit(f"{who} sum overflowed bigint")),
     ).otherwise(s)
     return loud.cast("long")
 
@@ -145,7 +146,7 @@ def refresh_rollup(
             # same overflow-loud law as rollup_table's sums — a silently
             # wrapped or NULLed delta would commit a corrupt rollup
             *[
-                _exact_long_sum(F.col("_sign") * _guarded(c)).alias(f"_d_{c}")
+                exact_long_sum(F.col("_sign") * _guarded(c)).alias(f"_d_{c}")
                 for c in sum_cols
             ],
         )

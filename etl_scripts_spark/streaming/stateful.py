@@ -1,12 +1,25 @@
-"""Custom stateful streaming operators via applyInPandasWithState.
+"""Keyed streaming state over the events stream, drained AvailableNow.
 
 The reference has no streaming engine, but its per-entity bookkeeping
 (RETRY_COUNT persistent map, register-fastq-dropbox.py:48-56; session-scoped
 used-identifier sets, register-nanopore.py:62-65) is exactly keyed mutable
 state over an event stream.  Re-expressed Spark-first: the state lives in the
-state store (checkpointed, partitioned by key, survives restarts), updates
-are Arrow-batched per group, and `Trigger.AvailableNow` drains whatever is
-on disk exactly once — the dropbox semantics.
+state store (checkpointed, partitioned by key, survives restarts) and
+`Trigger.AvailableNow` drains whatever is on disk exactly once — the
+dropbox semantics.
+
+Two classes of operator live here:
+
+  - the ALGEBRAIC ones — user totals (count + sum), first-seen dedup
+    (min of (ts, event_id) + count), the CMS (counters add) and the HLL
+    (registers max) — are mergeable summaries, so they are plain native
+    streaming aggregates: the state store keeps the partial aggregates
+    with no per-group Python crossing, the drain runs in complete mode
+    (the memory sink then holds exactly the final state, so the drained
+    table IS the result) and shards to the native law (:mod:`.tuning`).
+  - KMV (a bottom-k hash set) and the rolling z-score (an ordered ring
+    buffer) keep custom state via applyInPandasWithState; they alone
+    use the Python-state shard law.
 
 At 100 TB the state store shards with the shuffle partitioning of the group
 key; no driver-side maps, no collect.
@@ -14,7 +27,6 @@ key; no driver-side maps, no collect.
 
 from __future__ import annotations
 
-import itertools
 from typing import Any, Iterator, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,178 +34,80 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_name_counter = itertools.count()
-
-USER_TOTALS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_cents", T.LongType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("cents", T.LongType()),
-    ]
-)
-
-
-def _user_totals_fn(
-    key: Tuple[Any, ...], pdfs: Iterator, state: GroupState
-) -> Iterator:
-    """Accumulate (count, value-cents) per user in keyed state.
-
-    Cents via floor(v*100 + 0.5) — identical float semantics in numpy and
-    any SQL oracle, unlike round() whose tie-breaking differs per engine.
-    """
-    import numpy as np
-    import pandas as pd
-
-    n, cents = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        cents += int(np.floor(pdf["value"].to_numpy() * 100.0 + 0.5).sum())
-    state.update((n, cents))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]})
-
-
-FIRST_SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("first_event_id", T.LongType()),
-        T.StructField("first_ts", T.TimestampType()),
-        T.StructField("n_duplicates", T.LongType()),
-    ]
-)
-
-_FIRST_SEEN_STATE = T.StructType(
-    [
-        T.StructField("first_ts_us", T.LongType()),
-        T.StructField("first_event_id", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def _first_seen_fn(key, pdfs, state: GroupState):
-    """Keep the first arrival per key ((ts, event_id) lexicographic — stable
-    under any micro-batch arrival order), count the rest as duplicates."""
-    import pandas as pd
-
-    first_us, first_id, n = state.get if state.exists else (None, None, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        us = (pdf["ts"].astype("int64") // 1000).to_numpy()
-        ids = pdf["event_id"].to_numpy()
-        i = min(range(len(pdf)), key=lambda j: (us[j], ids[j]))
-        if first_us is None or (int(us[i]), int(ids[i])) < (first_us, first_id):
-            first_us, first_id = int(us[i]), int(ids[i])
-    state.update((first_us, first_id, n))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "event_type": [key[1]],
-            "first_event_id": [first_id],
-            "first_ts": [pd.Timestamp(first_us, unit="us")],
-            "n_duplicates": [n - 1],
-        }
-    )
+from .tuning import PY_STATE_KEYS_PER_SHARD
+from .windowed import _drain, _events_stream
 
 
 def _drain_events(spark: SparkSession, events_parquet: str, build, approx_keys: int) -> DataFrame:
-    """Shared AvailableNow drain harness for the stateful operators: read
-    the events stream (schema from the batch footer, glob for the file
-    source, NTZ/nanos normalization), let `build(stream)` attach the
-    stateful transformation, drain once into a memory sink with the state
-    shard count sized to the key cardinality, and return the sink table."""
-    from ..catalog import normalize_events
-    from .tuning import PY_STATE_KEYS_PER_SHARD, state_shuffle_partitions
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_parquet).schema
-    glob_path = events_parquet.rsplit(".", 1)[0] + ".*"
-    stream = normalize_events(spark.readStream.schema(schema).parquet(glob_path))
-    out = build(stream)
-    name = f"etl_stateful_out_{next(_name_counter)}"
-    # per-GROUP Python crossing → shard to the PyState law (tuning.py)
-    with state_shuffle_partitions(
-        spark, approx_keys, keys_per_shard=PY_STATE_KEYS_PER_SHARD
-    ):
-        query = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
+    """AvailableNow drain for the applyInPandasWithState operators:
+    `build(stream)` attaches the stateful stage; update mode, and the
+    per-GROUP Python crossing shards to the PyState law (tuning.py)."""
+    out = build(_events_stream(spark, events_parquet))
+    return _drain(
+        spark, out, approx_keys, mode="update", keys_per_shard=PY_STATE_KEYS_PER_SHARD
+    )
 
 
 def stateful_first_seen_available_now(
     spark: SparkSession, events_parquet: str, approx_keys: int = 7500
 ) -> DataFrame:
-    """Dedup-on-ingest as a custom stateful operator: the reference's
+    """Dedup-on-ingest as keyed streaming state: the reference's
     "already registered → log & drop" semantics (SURVEY §2.8) keyed by
-    (user_id, event_type), keeping the first arrival and counting dropped
-    duplicates.  The state store IS the registered-set; a restart resumes
-    from the checkpoint instead of re-registering."""
-
-    def build(stream):
-        return (
-            stream.select("user_id", "event_type", "event_id", "ts")
-            .groupBy("user_id", "event_type")
-            .applyInPandasWithState(
-                _first_seen_fn,
-                outputStructType=FIRST_SEEN_SCHEMA,
-                stateStructType=_FIRST_SEEN_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    (user_id, event_type), keeping the first arrival ((ts, event_id)
+    lexicographic — stable under any micro-batch arrival order) and
+    counting dropped duplicates.  The state store IS the registered-set;
+    a restart resumes from the checkpoint instead of re-registering."""
+    first = (
+        _events_stream(spark, events_parquet)
+        .groupBy("user_id", "event_type")
+        .agg(
+            F.min(F.struct("ts", "event_id")).alias("_first"),
+            F.count(F.lit(1)).alias("_n"),
         )
-
-    out = _drain_events(spark, events_parquet, build, approx_keys)
-    # update mode may emit per micro-batch; the final state row has max n.
-    return out.groupBy("user_id", "event_type").agg(
-        F.max_by("first_event_id", "n_duplicates").alias("first_event_id"),
-        F.max_by("first_ts", "n_duplicates").alias("first_ts"),
-        F.max("n_duplicates").alias("n_duplicates"),
+        .select(
+            "user_id",
+            "event_type",
+            F.col("_first.event_id").alias("first_event_id"),
+            F.col("_first.ts").alias("first_ts"),
+            (F.col("_n") - 1).alias("n_duplicates"),
+        )
     )
+    return _drain(spark, first, approx_keys)
 
 
 def stateful_user_totals_available_now(
     spark: SparkSession, events_parquet: str, approx_keys: int = 1500
 ) -> DataFrame:
-    """Per-user running totals as a custom stateful operator, drained to a
-    batch result.  With a single AvailableNow micro-batch the final state
-    equals the batch groupBy — which is what the oracle checks.
+    """Per-user running totals (count, value-cents) in keyed streaming
+    state, drained to a batch result.  The drained final state equals the
+    batch groupBy — which is what the oracle checks.
+
+    Cents via floor(v*100 + 0.5) — identical float semantics in any SQL
+    oracle, unlike round() whose tie-breaking differs per engine.  Both
+    steps are loud instead of wrong: a value whose cents leave BIGINT
+    (or NaN/inf, which floor() would saturate or zero) raises, and so
+    does a per-user sum past BIGINT (sinks.materialized.exact_long_sum,
+    on every ANSI setting) — as does a user whose values are all NULL.
 
     State-store shard count is sized to the user-id cardinality (see
     :mod:`.tuning`) — the catalog's events table has ~1.5 k distinct users
     per sf; at production key counts pass the table-statistics estimate.
     """
+    from ..sinks.materialized import exact_long_sum
 
-    def build(stream):
-        return (
-            stream.select("user_id", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _user_totals_fn,
-                outputStructType=USER_TOTALS_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    out = _drain_events(spark, events_parquet, build, approx_keys)
-    # update mode may emit a row per micro-batch per key; keep the last.
-    return out.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"), F.max_by("sum_cents", "n_events").alias("sum_cents")
+    x = F.col("value") * 100 + F.lit(0.5)
+    cents = F.when(F.abs(x) < F.lit(float(2**63)), F.floor(x)).when(
+        x.isNotNull(), F.raise_error(F.lit("user totals: value cents outside bigint"))
     )
+    totals = (
+        _events_stream(spark, events_parquet)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            exact_long_sum(cents, who="user totals: cents").alias("sum_cents"),
+        )
+    )
+    return _drain(spark, totals, approx_keys)
 
 
 KMV_SCHEMA = T.StructType(
@@ -293,108 +207,30 @@ def _kmv_finalize(out: DataFrame) -> DataFrame:
     return final.select("event_type", "sketch_n", est.alias("est_distinct"))
 
 
-CMS_SCHEMA = T.StructType(
-    [
-        T.StructField("r", T.IntegerType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("counters", T.StringType()),
-    ]
-)
-
-_CMS_STATE = T.StructType(
-    [T.StructField("version", T.LongType()), T.StructField("counters", T.StringType())]
-)
-
 _CMS_D = 4
 _CMS_W = 256
-
-
-def _cms_fn(key: Tuple[Any, ...], pdfs: Iterator, state: GroupState) -> Iterator:
-    """Add each micro-batch's pre-bucketed hits into this row's w counters
-    (the algebraic CMS merge: counters add).  State is one CSV of w ints —
-    bounded regardless of stream volume."""
-    import pandas as pd
-
-    if state.exists:
-        version, csv = state.get
-        counters = [int(x) for x in csv.split(",")]
-    else:
-        version, counters = 0, [0] * _CMS_W
-    for pdf in pdfs:
-        version += len(pdf)
-        for b, c in pdf["b"].value_counts().items():
-            counters[int(b)] += int(c)
-    csv = ",".join(str(c) for c in counters)
-    state.update((version, csv))
-    yield pd.DataFrame(
-        {"r": [int(key[0])], "version": [version], "counters": [csv]}
-    )
 
 
 def stateful_cms_available_now(
     spark: SparkSession, events_parquet: str
 ) -> DataFrame:
-    """Streaming count-min sketch maintenance: the d×w counter matrix
-    lives IN the state store (one row-salt per state key) and every
-    micro-batch adds its pre-bucketed hits — operators/sketch.cms_build
-    run live, with the SAME bucket law (first 32 bits of md5(r|value)
-    mod w) computed as a Catalyst projection BEFORE the stateful stage,
-    so the Python fn only increments counters.  After the AvailableNow
-    drain the final state equals the batch sketch over all events
-    row-for-row; returns (r, b, cnt) in the batch layout so
-    cms_estimate / heavy-hitter probes compose unchanged.
+    """Streaming count-min sketch maintenance: operators/sketch.cms_build
+    run live — its groupBy(r, b).count() over the d-fanout of bucket
+    probes IS a native streaming aggregate, so the d×w counter matrix
+    lives in the state store and every micro-batch adds its hits (the
+    algebraic CMS merge: counters add).  After the AvailableNow drain the
+    final state equals the batch sketch over all events row-for-row, in
+    the batch (r, b, cnt) layout, so cms_estimate / heavy-hitter probes
+    compose unchanged.
     """
+    from ..operators.sketch import cms_build
 
-    def build(stream):
-        probes = [
-            F.struct(
-                F.lit(j).alias("r"),
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    "|", F.lit(str(j)), F.col("user_id").cast("string")
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("bigint")
-                    % _CMS_W
-                ).alias("b"),
-            )
-            for j in range(_CMS_D)
-        ]
-        return (
-            stream.filter(F.col("user_id").isNotNull())
-            .select(F.explode(F.array(*probes)).alias("_rb"))
-            .select("_rb.r", "_rb.b")
-            .groupBy("r")
-            .applyInPandasWithState(
-                _cms_fn,
-                outputStructType=CMS_SCHEMA,
-                stateStructType=_CMS_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    out = _drain_events(spark, events_parquet, build, _CMS_D)
-    # keep the LAST emission per row-salt (max version), then explode the
-    # counter CSV back to the batch (r, b, cnt) layout, dropping zeros to
-    # match cms_build's sparse output
-    last = (
-        out.groupBy("r")
-        .agg(F.max_by("counters", "version").alias("counters"))
-        .select("r", F.split("counters", ",").alias("_cs"))
+    values = (
+        _events_stream(spark, events_parquet)
+        .filter(F.col("user_id").isNotNull())
+        .select(F.col("user_id").cast("string").alias("v"))
     )
-    exploded = last.select(
-        "r", F.posexplode("_cs").alias("b", "_c")
-    ).select("r", "b", F.col("_c").cast("bigint").alias("cnt"))
-    return exploded.filter(F.col("cnt") > 0)
+    return _drain(spark, cms_build(values, "v", d=_CMS_D, w=_CMS_W), _CMS_D * _CMS_W)
 
 
 # --- streaming rolling z-score anomaly detection ---------------------------
@@ -547,90 +383,27 @@ def stateful_rolling_zscore_available_now(
 
 # --- streaming HyperLogLog maintenance --------------------------------------
 
-HLL_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("registers", T.StringType()),
-    ]
-)
-
-_HLL_STATE = T.StructType(
-    [T.StructField("version", T.LongType()), T.StructField("registers", T.StringType())]
-)
-
-#: streaming register precision: m=1024 keeps the per-key state CSV ~4 KB
+#: streaming register precision: m=1024 registers per event type
 _HLL_P = 10
-
-
-def _hll_fn(key: Tuple[Any, ...], pdfs: Iterator, state: GroupState) -> Iterator:
-    """Max each micro-batch's (bucket, rho) rows into this key's m
-    registers (the algebraic HLL merge: registers max) — bounded state
-    regardless of stream volume."""
-    import pandas as pd
-
-    if state.exists:
-        version, csv = state.get
-        regs = [int(x) for x in csv.split(",")]
-    else:
-        version, regs = 0, [0] * (1 << _HLL_P)
-    for pdf in pdfs:
-        version += len(pdf)
-        for b, r in zip(pdf["bucket"], pdf["rho"]):
-            b = int(b)
-            if int(r) > regs[b]:
-                regs[b] = int(r)
-    csv = ",".join(str(r) for r in regs)
-    state.update((version, csv))
-    yield pd.DataFrame(
-        {"event_type": [key[0]], "version": [version], "registers": [csv]}
-    )
 
 
 def stateful_hll_available_now(
     spark: SparkSession, events_parquet: str, approx_keys: int = 8
 ) -> DataFrame:
-    """Streaming HyperLogLog maintenance: the per-event-type register
-    array lives IN the state store and every micro-batch maxes its
-    (bucket, rho) rows in — operators/sketch.hll_registers run live, with
-    the SAME bucket/rho law (sketch.hll_bucket_rho) computed as a
-    Catalyst projection BEFORE the stateful stage, so the Python fn only
-    takes maxes.  After the AvailableNow drain the final state equals the
-    batch register table over all events row-for-row; returns
-    (event_type, bucket, register) in the batch layout (zero registers
-    dropped — absent buckets are implicit there too), so hll_estimate
-    composes unchanged."""
-    from ..operators.sketch import hll_bucket_rho
+    """Streaming HyperLogLog maintenance: operators/sketch.hll_registers
+    run live — its groupBy(group, bucket).max(rho) IS a native streaming
+    aggregate, so the per-event-type register array lives in the state
+    store and every micro-batch maxes its (bucket, rho) rows in (the
+    algebraic HLL merge: registers max) — bounded state regardless of
+    stream volume.  After the AvailableNow drain the final state equals
+    the batch register table over all events row-for-row, in the batch
+    (event_type, bucket, register) layout (absent buckets implicit), so
+    hll_estimate composes unchanged.  `approx_keys` counts event types;
+    the state holds up to 2^p registers for each."""
+    from ..operators.sketch import hll_registers
 
-    def build(stream):
-        bucket, rho = hll_bucket_rho(F.col("user_id").cast("string"), _HLL_P)
-        return (
-            stream.filter(F.col("user_id").isNotNull())
-            .select("event_type", bucket.alias("bucket"), rho.alias("rho"))
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _hll_fn,
-                outputStructType=HLL_SCHEMA,
-                stateStructType=_HLL_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    out = _drain_events(spark, events_parquet, build, approx_keys)
-    # keep the LAST emission per key, explode the CSV back to the sparse
-    # batch (event_type, bucket, register) layout
-    last = (
-        out.groupBy("event_type")
-        .agg(F.max_by("registers", "version").alias("registers"))
-        .select("event_type", F.split("registers", ",").alias("_rs"))
+    values = _events_stream(spark, events_parquet).select(
+        "event_type", F.col("user_id").cast("string").alias("v")
     )
-    return (
-        last.select("event_type", F.posexplode("_rs").alias("bucket", "_r"))
-        .select(
-            "event_type",
-            F.col("bucket").cast("int").alias("bucket"),
-            F.col("_r").cast("int").alias("register"),
-        )
-        .filter(F.col("register") > 0)
-    )
+    registers = hll_registers(values, "event_type", "v", p=_HLL_P)
+    return _drain(spark, registers, approx_keys << _HLL_P)

@@ -14,34 +14,40 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tuning import NATIVE_STATE_KEYS_PER_SHARD, state_shuffle_partitions
+
 _name_counter = itertools.count()
 
 
 def _events_stream(spark: SparkSession, events_parquet: str) -> DataFrame:
-    """Shared file-source plumbing for every wrapper here: nanos conf,
-    schema from the batch reader, sibling glob (the file-stream source
-    wants a directory or glob, not a bare file path), normalized ts.
-    ONE copy — a fix to the glob derivation or the conf handling must
-    not be re-applied per wrapper."""
-    from ..catalog import normalize_events
+    """Shared file-source plumbing for every streaming wrapper (here and
+    in :mod:`.stateful`): nanos conf, schema from the batch footer
+    (memoized, catalog.parquet_schema), sibling glob (the file-stream
+    source wants a directory or glob, not a bare file path), normalized
+    ts.  ONE copy — a fix to the glob derivation or the conf handling
+    must not be re-applied per wrapper."""
+    from ..catalog import normalize_events, parquet_schema
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_parquet).schema
+    schema = parquet_schema(spark, events_parquet)
     glob_path = events_parquet.rsplit(".", 1)[0] + ".*"
     return normalize_events(spark.readStream.schema(schema).parquet(glob_path))
 
 
 def _drain(
-    spark: SparkSession, out: DataFrame, approx_keys: int, mode: str = "complete"
+    spark: SparkSession,
+    out: DataFrame,
+    approx_keys: int,
+    mode: str = "complete",
+    keys_per_shard: int = NATIVE_STATE_KEYS_PER_SHARD,
 ) -> DataFrame:
     """Shared AvailableNow → memory-sink drain with the state shard
-    count sized to the key cardinality (see :mod:`.tuning`) — native
-    stateful operators, so the µs-per-key NATIVE law applies."""
-    from .tuning import NATIVE_STATE_KEYS_PER_SHARD, state_shuffle_partitions
-
+    count sized to the key cardinality (see :mod:`.tuning`).  Native
+    stateful operators take the µs-per-key NATIVE law (the default);
+    applyInPandasWithState callers pass the Python-state law."""
     name = f"etl_stream_out_{next(_name_counter)}"
     with state_shuffle_partitions(
-        spark, approx_keys, keys_per_shard=NATIVE_STATE_KEYS_PER_SHARD
+        spark, approx_keys, keys_per_shard=keys_per_shard
     ):
         query = (
             out.writeStream.outputMode(mode)

@@ -113,6 +113,10 @@ CROSS_JOINS_BY_DESIGN = {
     "q_stratified_sample",
 }
 
+#: Queries that drain a stream at call time and return the memory-sink
+#: table, whose plan is a trivial scan.  The algebraic streaming-state
+#: drains (here and q_stream_hll in EAGER) are audited at the drain
+#: boundary instead (test_algebraic_stream_state_is_native).
 STREAMING = {
     "q_stream_hourly_rollup",
     "q_stream_user_totals",
@@ -168,6 +172,53 @@ def test_no_row_at_a_time_python(spark, name):
     assert "element_at(split(trim(regexp_replace" not in plan, (
         f"{name} inlines the tokenizer expression into a HOF lambda"
     )
+
+
+def _drained_plan(spark, monkeypatch, operator: str) -> str:
+    """Explain the streaming DataFrame a streaming-state operator hands to
+    its AvailableNow drain (the sink table it returns hides the plan);
+    the drain itself is skipped."""
+    from etl_scripts_spark.streaming import stateful
+
+    plans = []
+
+    def explain_only(spark, out, approx_keys, **kwargs):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain("extended")
+        plans.append(buf.getvalue())
+        return out
+
+    monkeypatch.setattr(stateful, "_drain", explain_only)
+    getattr(stateful, operator)(spark, f"{SF}/events.parquet")
+    (plan,) = plans
+    return plan
+
+
+@pytest.mark.parametrize(
+    "operator",
+    [
+        "stateful_user_totals_available_now",
+        "stateful_first_seen_available_now",
+        "stateful_cms_available_now",
+        "stateful_hll_available_now",
+    ],
+)
+def test_algebraic_stream_state_is_native(spark, monkeypatch, operator):
+    """Count + sum, min + count, counters add, registers max: mergeable
+    state the state store keeps natively — no group may cross into
+    Python (the per-group crossing cost 0.25–1 ms/key)."""
+    plan = _drained_plan(spark, monkeypatch, operator)
+    assert "StateStoreSave" in plan, f"{operator}: no native streaming aggregate"
+    for marker in ("FlatMapGroupsInPandasWithState", "ArrowEvalPython", "BatchEvalPython"):
+        assert marker not in plan, f"{operator} has a Python stage ({marker})"
+
+
+def test_custom_stream_state_plan_shows_python(spark, monkeypatch):
+    """Control for the audit above: KMV keeps custom Python state, and the
+    drain-boundary explain does show it."""
+    plan = _drained_plan(spark, monkeypatch, "stateful_kmv_available_now")
+    assert "FlatMapGroupsInPandasWithState" in plan
 
 
 def test_pricing_summary_scan_is_minimal(spark):
